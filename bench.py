@@ -114,19 +114,6 @@ def el_score_path(spark, fixture_dir: str):
     ).persist()
     n_pairs = cands.count()  # materializes blocking (2 longs/row cached)
     pairs = cands.join(F.broadcast(m_feat), "idx_a").join(F.broadcast(e_feat), "idx_b")
-    if os.environ.get("SPARK_GRAFT_SCORING_STAGE", "0") == "1":
-        # Experiment (VERDICT r03 #3): materialize the feature-joined pair
-        # table as a columnar stage INSIDE the timed region, so the
-        # scoring stage is a pure scan → Arrow UDF → sink with no
-        # broadcast-probe/join work in it (the phase table localizes the
-        # scaling ceiling to the JVM side of the scoring stage).  At web
-        # scale this is the checkpointed stage-table shape anyway
-        # (sources/catalog.py); the A/B (scripts/scaling_ab.py --variants
-        # baseline,scoring_stage --reps N) decides if it pays here.
-        stage_root = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-        stage_dir = os.path.join(stage_root, f"el_scoring_input_{os.getpid()}")
-        pairs.write.mode("overwrite").parquet(stage_dir)
-        pairs = spark.read.parquet(stage_dir)
     scored = score_indexed_pairs(pairs, ba, bb, conf=ScoringConfig()).select(
         # long-encoded ids (even=mention, odd=entity) keep the namespaces
         # disjoint for CC while the scored table stays 3 fixed-width cols
@@ -485,7 +472,7 @@ def run_kernel_scaling(
     procs_small: int = 8, procs_big: int = 32, reps: int = 3
 ) -> dict:
     """Scaling of the scoring COMPUTE KERNEL (the Python side of
-    score_indexed_pairs: JW×2-with-skip + embedding einsum) measured with
+    score_indexed_pairs, operators/scoring.py:_score_batch) measured with
     plain multiprocessing — no Spark orchestration, no shuffle.
 
     This isolates what a real N→4N EXECUTOR scale-out parallelizes
@@ -547,7 +534,7 @@ def _kernel_unit(seed: int) -> int:
     import numpy as np
     import pandas as pd
 
-    from entity_linking_spark.functions.similarity import jaro_winkler_batch
+    from entity_linking_spark.operators.scoring import _score_batch
 
     rng = np.random.RandomState(seed)
     vocab = [f"term{i:03d}" for i in range(50)] + [
@@ -561,16 +548,7 @@ def _kernel_unit(seed: int) -> int:
     ea = rng.standard_normal((n, 128)).astype(np.float32)
     eb = rng.standard_normal((n, 128)).astype(np.float32)
     for _ in range(reps):
-        np.einsum("ij,ij->i", ea, eb, dtype=np.float64)
-        jw = jaro_winkler_batch(sa, sb)
-        changed = (sa.to_numpy() != ssa.to_numpy()) | (sb.to_numpy() != ssb.to_numpy())
-        idx = np.flatnonzero(changed)
-        if len(idx):
-            jw2 = jaro_winkler_batch(
-                ssa.iloc[idx].reset_index(drop=True),
-                ssb.iloc[idx].reset_index(drop=True),
-            )
-            jw[idx] = np.maximum(jw[idx], jw2)
+        _score_batch(ea, eb, sa, sb, ssa, ssb)
     return n * reps
 
 
@@ -747,7 +725,7 @@ def run_scaling() -> dict:
             "relieve the shared memory bus; see session.py).  Idx-only\n"
             "scoring (r2): ~2.4× slower, kept rejected.  r4 tried the\n"
             "VERDICT-r03-named lever — a SCORING-INPUT STAGE TABLE\n"
-            "(SPARK_GRAFT_SCORING_STAGE=1: the feature-joined pair table\n"
+            "(the feature-joined pair table\n"
             "lands in a columnar stage inside the timed region, making the\n"
             "scoring stage a pure scan→Arrow-UDF→sink with no broadcast\n"
             "probes) — interleaved A/B at 32 cores (2 reps each):\n"
@@ -760,7 +738,7 @@ def run_scaling() -> dict:
             "spread collapsed (±0.1% vs ±12%), consistent with the\n"
             "broadcast probe being the variance source; at web scale the\n"
             "pair table is a checkpointed stage anyway (resume seam), so\n"
-            "the shape remains available via the env flag.  The residual\n"
+            "the shape is not kept as a bench variant.  The residual\n"
             "efficiency gap is the shared-box shuffle/DRAM ceiling, which\n"
             "a real 4N-executor cluster does not share.\n\n"
             "The clustering stage is reported separately: large-star/small-star\n"

@@ -139,7 +139,7 @@ def make_embed_binary_udf(dim: int = DEFAULT_DIM, n: int = DEFAULT_NGRAM):
     object per row; the array<float> representation materializes a Python
     list/ndarray per row on every downstream UDF crossing AND costs boxed
     per-element evaluation in JVM higher-order functions.  The packed form
-    feeds the fused pair-scoring UDF (operators/scoring.py) — unpack is a
+    feeds the pair-scoring kernel (operators/scoring.py) — unpack is a
     single np.frombuffer over the whole batch."""
     from pyspark.sql.types import BinaryType
 

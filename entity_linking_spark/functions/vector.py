@@ -1,16 +1,16 @@
-"""Vector math over array<float>/array<double> columns.
+"""Vector math over embedding columns.
 
-Two paths:
-- Column-expression path (``dot``, ``l2_norm``, ``cosine``): JVM-side
-  higher-order functions — **this is the hot path**.  Measured on
-  local[32] over 2M 128-d pairs: JVM dot ≈ 1s, JVM cosine ≈ 4s, the
-  Arrow pandas-UDF path ≈ 27s.  Shipping array columns through Arrow
-  materializes a Python object per row (list→ndarray), which costs far
-  more than the arithmetic; per-pair vector math must stay in the JVM.
-- Arrow path (``dot_batch_udf``, ``cosine_batch_udf``): kept for parity
-  tests and for stages that are already inside a pandas UDF for other
-  reasons (reference scoring semantic: dot product,
-  src/eval_zeshel.py:44, src/bi_encoder.py:96).
+Two representations:
+- ``array<float>``/``array<double>`` columns (``dot``, ``l2_norm``,
+  ``cosine``): JVM-side higher-order functions, for stages that hold
+  array embeddings (``__spark_entry__.q_retrieval_rate``).  Shipping array
+  columns through Arrow materializes a Python object per row (list→
+  ndarray) — measured ~27× the arithmetic on local[32] over 2M 128-d
+  pairs — so per-pair array math stays in the JVM.
+- packed float32 ``binary`` columns (``pack_f32_udf``,
+  ``_packed_to_matrix``, ``cosine_packed_udf``): one ``np.frombuffer``
+  per Arrow batch, no per-row objects — the form every pair-level
+  Python stage uses (operators/scoring.py, operators/ann.py).
 
 Math runs in float64 (elements cast before multiply) so results align
 with numpy/DuckDB float64 within summation-order noise.
@@ -51,10 +51,6 @@ def l2_norm(a: Column | str) -> Column:
 def cosine(a: Column | str, b: Column | str) -> Column:
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
-
-
-def _to_matrix(s: pd.Series) -> np.ndarray:
-    return np.array([np.asarray(x, dtype=np.float64) for x in s])
 
 
 def _packed_to_matrix(s: pd.Series) -> np.ndarray:
@@ -108,17 +104,3 @@ def cosine_packed_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     out = np.where(denom == 0, 0.0, num / np.where(denom == 0, 1.0, denom))
     return pd.Series(out)
 
-
-@pandas_udf(DoubleType())
-def dot_batch_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    ma, mb = _to_matrix(a), _to_matrix(b)
-    return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-
-@pandas_udf(DoubleType())
-def cosine_batch_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    ma, mb = _to_matrix(a), _to_matrix(b)
-    num = np.einsum("ij,ij->i", ma, mb)
-    denom = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-    out = np.where(denom == 0, 0.0, num / np.where(denom == 0, 1.0, denom))
-    return pd.Series(out)

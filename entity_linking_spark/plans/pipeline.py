@@ -8,7 +8,7 @@ Stage graph (each stage lands in the catalog; resume skips complete ones):
                                                                      ▼
                          candidates (salted blocking + MinHash-LSH bands)
                                                                      ▼
-                         scored (Arrow UDFs: cosine + JW + Levenshtein)
+                         scored (score_candidates: dot + JW + Levenshtein)
                                                                      ▼
                          edges (per-mention top-1 ≥ threshold)
                                                                      ▼
@@ -40,10 +40,9 @@ from entity_linking_spark.operators.blocking import (
     candidate_pairs,
 )
 from entity_linking_spark.operators.cluster import connected_components
-from entity_linking_spark.operators.scoring import ScoringConfig, score_pairs
+from entity_linking_spark.operators.scoring import ScoringConfig, score_candidates
 from entity_linking_spark.operators.topk import retrieval_rates, top_k_per_group
 from entity_linking_spark.plans.evaluate import (
-    PairwiseMetrics,
     pairwise_f1_from_contingency,
     pairwise_f1_from_labeled,
 )
@@ -57,17 +56,6 @@ class PipelineConfig:
     blocking: BlockingConfig = field(default_factory=BlockingConfig)
     scoring: ScoringConfig = field(default_factory=ScoringConfig)
     strict_extract: bool = True
-    # Feature tables below this row count score via the broadcast-indexed
-    # plan (id pairs + matrix broadcasts — no shuffle of embedding-laden
-    # rows); above it, the join-attached fused-UDF plan (web scale).
-    broadcast_feature_rows: int = 500_000
-    # Catalog-backed blocking (VERDICT r04 stretch #8): the exploded key
-    # streams land as stages and candidate_pairs runs in stage-table
-    # hot-key mode (key_stats stage, zero driver collect) — a killed run
-    # resumes blocking from the checkpointed keys/stats instead of
-    # recomputing the MinHash key expressions over the corpus.  False
-    # restores the one-shot in-memory mode.
-    stage_table_blocking: bool = True
 
 
 def prepare_mentions(pages: DataFrame, mentions: DataFrame, context_size: int) -> DataFrame:
@@ -84,8 +72,8 @@ def prepare_mentions(pages: DataFrame, mentions: DataFrame, context_size: int) -
         ctx.alias("context"),
     )
     return prepped.withColumn(
-        # packed float32 bytes — feeds the fused scoring UDF
-        # (operators/scoring.py:score_pairs_fused)
+        # packed float32 bytes — the scoring kernel's input
+        # (operators/scoring.py:score_candidates)
         "embedding",
         embed_text_binary(F.concat_ws(" | ", "norm_surface", "context")),
     )
@@ -134,63 +122,37 @@ def link_entities(
     )
 
     def compute_candidates() -> DataFrame:
-        if cfg.stage_table_blocking:
-            # full catalog-backed blocking: key streams + key_stats are
-            # resumable stages, classification is distributed (no driver
-            # collect) — a rerun after a mid-blocking kill reuses every
-            # complete stage and re-scans nothing
-            mk = cat.get_or_compute(
-                "mention_blocking_keys",
-                lambda: blocking_keys(
-                    m_prep, "mention_id", "norm_surface", cfg.blocking
-                ),
-                resume,
-            )
-            ek = cat.get_or_compute(
-                "entity_blocking_keys",
-                lambda: blocking_keys(
-                    e_prep, "entity_id", "norm_title", cfg.blocking
-                ),
-                resume,
-            )
-            return candidate_pairs(
-                mk, ek, cfg.blocking, catalog=cat, resume=resume
-            )
-        mk = blocking_keys(m_prep, "mention_id", "norm_surface", cfg.blocking)
-        ek = blocking_keys(e_prep, "entity_id", "norm_title", cfg.blocking)
-        return candidate_pairs(mk, ek, cfg.blocking)
+        # catalog-backed blocking: key streams + key_stats are resumable
+        # stages, classification is distributed (no driver collect) — a
+        # rerun after a mid-blocking kill reuses every complete stage and
+        # re-scans nothing
+        mk = cat.get_or_compute(
+            "mention_blocking_keys",
+            lambda: blocking_keys(m_prep, "mention_id", "norm_surface", cfg.blocking),
+            resume,
+        )
+        ek = cat.get_or_compute(
+            "entity_blocking_keys",
+            lambda: blocking_keys(e_prep, "entity_id", "norm_title", cfg.blocking),
+            resume,
+        )
+        return candidate_pairs(mk, ek, cfg.blocking, catalog=cat, resume=resume)
 
     cands = cat.get_or_compute("candidates", compute_candidates, resume)
 
     def compute_scored() -> DataFrame:
-        out_cols = [
+        # the manifest already holds both feature tables' row counts, so
+        # the plan choice runs no Spark job
+        feature_rows = max(
+            cat.manifest_entry(name)["rows"]
+            for name in ("mentions_prepared", "entities_prepared")
+        )
+        return score_candidates(
+            cands, m_prep, e_prep, cfg.scoring, feature_rows
+        ).select(
             "mention_id", "entity_id", "blocking_key",
             "cosine", "jaro_winkler", "lev_sim", "score",
-        ]
-        # Plan selection mirrors Catalyst's broadcast-vs-shuffle decision,
-        # but at the operator level: dimension-sized feature tables go
-        # through the indexed scorer (id-pair stream only).
-        if (
-            m_prep.count() <= cfg.broadcast_feature_rows
-            and e_prep.count() <= cfg.broadcast_feature_rows
-        ):
-            from entity_linking_spark.operators.scoring import score_pairs_broadcast
-
-            return score_pairs_broadcast(
-                cands, m_prep, e_prep, conf=cfg.scoring
-            ).select(*out_cols)
-        m_side = m_prep.select(
-            "mention_id",
-            F.col("norm_surface").alias("surf_a"),
-            F.col("embedding").alias("emb_a"),
         )
-        e_side = e_prep.select(
-            "entity_id",
-            F.col("norm_title").alias("surf_b"),
-            F.col("embedding").alias("emb_b"),
-        )
-        pairs = cands.join(m_side, "mention_id").join(e_side, "entity_id")
-        return score_pairs(pairs, conf=cfg.scoring).select(*out_cols)
 
     scored = cat.get_or_compute("scored", compute_scored, resume)
 

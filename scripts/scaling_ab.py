@@ -31,30 +31,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 VARIANTS: dict[str, dict[str, str]] = {
     "baseline": {},
-    "offheap16g": {
-        "SPARK_GRAFT_EXTRA_CONF":
-            "spark.memory.offHeap.enabled=true;spark.memory.offHeap.size=16g",
-    },
-    "parallel_gc": {
-        "SPARK_GRAFT_JAVA_OPTS": "-XX:+UseParallelGC",
-    },
-    "offheap+pgc": {
-        "SPARK_GRAFT_EXTRA_CONF":
-            "spark.memory.offHeap.enabled=true;spark.memory.offHeap.size=16g",
-        "SPARK_GRAFT_JAVA_OPTS": "-XX:+UseParallelGC",
-    },
-    "arrow100k": {
-        "SPARK_GRAFT_EXTRA_CONF":
-            "spark.sql.execution.arrow.maxRecordsPerBatch=100000",
-    },
     "spill_nocomp": {
         "SPARK_GRAFT_EXTRA_CONF": "spark.shuffle.spill.compress=false",
-    },
-    "scoring_stage": {
-        # materialize the feature-joined pair table as a columnar stage so
-        # the scoring stage is scan→UDF→sink with no broadcast probes
-        # (VERDICT r03 #3); write+read-back happens inside the timed region
-        "SPARK_GRAFT_SCORING_STAGE": "1",
     },
 }
 

@@ -1,20 +1,22 @@
-"""Scoring-path equivalence: the three physical plans (array-column UDF
-path, fused binary-embedding UDF, broadcast-indexed scorer) must produce
-the same cosine/jaro_winkler/lev_sim/score for the same pairs — they are
-alternative physical strategies for one semantic (SURVEY.md §2.9 U4,
-reference src/eval_zeshel.py:44 dot-product scoring + north-rule JW/lev).
-"""
+"""score_candidates against a numpy reference, for both physical plans
+(matrix-broadcast indexed, join-attached packed bytes).  The reference
+is the scoring semantic written out directly: the dot product of the
+decoded float32 embeddings (reference src/eval_zeshel.py:44) plus
+max(raw, token-sorted) Jaro-Winkler and Levenshtein similarity (the
+batch kernels are checked against pure-Python references in
+tests/test_property.py)."""
 
 import numpy as np
+import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from entity_linking_spark.functions.encoder import embed_text, embed_text_binary
-from entity_linking_spark.operators.scoring import (
-    ScoringConfig,
-    score_pairs,
-    score_pairs_broadcast,
+from entity_linking_spark.functions.encoder import embed_text_binary
+from entity_linking_spark.functions.similarity import (
+    jaro_winkler_batch,
+    levenshtein_batch,
 )
+from entity_linking_spark.operators import scoring
+from entity_linking_spark.operators.scoring import ScoringConfig, score_candidates
 
 SURFACES_A = [
     "crimson falcon society", "gilded harbor", "silent citadel",
@@ -27,92 +29,65 @@ SURFACES_B = [
 
 
 @pytest.fixture(scope="module")
-def pair_inputs(spark):
-    rows = [(f"m{i}", a, f"e{i}", b) for i, (a, b) in enumerate(zip(SURFACES_A, SURFACES_B))]
-    df = spark.createDataFrame(rows, "mention_id string, surf_a string, entity_id string, surf_b string")
-    return df.persist()
-
-
-def _collect_scores(df):
-    out = {}
-    for r in df.collect():
-        out[(r["mention_id"], r["entity_id"])] = (
-            r["cosine"], r["jaro_winkler"], r["lev_sim"], r["score"]
-        )
-    return out
-
-
-def test_fused_binary_matches_array_path(spark, pair_inputs):
-    arr = pair_inputs.withColumns(
-        {"emb_a": embed_text("surf_a"), "emb_b": embed_text("surf_b")}
+def features(spark):
+    n = len(SURFACES_A)
+    m_feat = spark.createDataFrame(
+        [(f"m{i}", s) for i, s in enumerate(SURFACES_A)],
+        "mention_id string, norm_surface string",
+    ).withColumn("embedding", embed_text_binary("norm_surface")).persist()
+    e_feat = spark.createDataFrame(
+        [(f"e{i}", s) for i, s in enumerate(SURFACES_B)],
+        "entity_id string, norm_title string",
+    ).withColumn("embedding", embed_text_binary("norm_title")).persist()
+    cands = spark.createDataFrame(
+        [(f"m{i}", f"e{i}") for i in range(n)], "mention_id string, entity_id string"
     )
-    binry = pair_inputs.withColumns(
-        {"emb_a": embed_text_binary("surf_a"), "emb_b": embed_text_binary("surf_b")}
+    return cands, m_feat, e_feat
+
+
+def _score(monkeypatch, features, plan: str) -> dict:
+    """score_candidates rows by mention_id; ``plan="join"`` forces the
+    join-attached plan by lowering the broadcast limit below the table."""
+    monkeypatch.setattr(
+        scoring, "BROADCAST_FEATURE_ROWS", 0 if plan == "join" else len(SURFACES_A)
     )
-    conf = ScoringConfig()
-    s_arr = _collect_scores(score_pairs(arr, conf=conf))
-    s_bin = _collect_scores(score_pairs(binry, conf=conf))  # dispatches to fused
-    assert s_arr.keys() == s_bin.keys()
-    for k in s_arr:
-        np.testing.assert_allclose(s_arr[k], s_bin[k], atol=1e-6, err_msg=str(k))
+    cands, m_feat, e_feat = features
+    out = score_candidates(cands, m_feat, e_feat, ScoringConfig(),
+                           feature_rows=len(SURFACES_A))
+    return {r["mention_id"]: r for r in out.collect()}
 
 
-def test_fused_binary_order_sensitive_matches_array_path(spark, pair_inputs):
-    """token_order_invariant=False with binary embeddings must dispatch to
-    the fused path (not the JVM zip_with fallback, which raises on
-    BinaryType — ADVICE r01 #3) and agree with the array path."""
-    arr = pair_inputs.withColumns(
-        {"emb_a": embed_text("surf_a"), "emb_b": embed_text("surf_b")}
-    )
-    binry = pair_inputs.withColumns(
-        {"emb_a": embed_text_binary("surf_a"), "emb_b": embed_text_binary("surf_b")}
-    )
-    conf = ScoringConfig()
-    s_arr = _collect_scores(score_pairs(arr, conf=conf, token_order_invariant=False))
-    s_bin = _collect_scores(score_pairs(binry, conf=conf, token_order_invariant=False))
-    assert s_arr.keys() == s_bin.keys()
-    for k in s_arr:
-        np.testing.assert_allclose(s_arr[k], s_bin[k], atol=1e-6, err_msg=str(k))
-    # the token-swapped pair must score LOWER than under order-invariance
-    inv = _collect_scores(score_pairs(binry, conf=conf, token_order_invariant=True))
-    swapped = ("m3", "e3")  # "falcon crimson society" vs "crimson falcon society"
-    assert s_bin[swapped][1] < inv[swapped][1]
+def _numpy_reference(m_feat, e_feat, conf: ScoringConfig) -> dict:
+    def decode(df, id_col):
+        rows = sorted(df.select(id_col, "embedding").collect())
+        return np.stack([np.frombuffer(r["embedding"], dtype="<f4") for r in rows])
+
+    ma, mb = decode(m_feat, "mention_id"), decode(e_feat, "entity_id")
+    a, b = pd.Series(SURFACES_A), pd.Series(SURFACES_B)
+    sa = a.map(lambda s: " ".join(sorted(s.split(" "))))
+    sb = b.map(lambda s: " ".join(sorted(s.split(" "))))
+    cos = np.einsum("ij,ij->i", ma.astype(np.float64), mb.astype(np.float64))
+    jw = np.maximum(jaro_winkler_batch(a, b), jaro_winkler_batch(sa, sb))
+    lev = np.maximum(levenshtein_batch(a, b), levenshtein_batch(sa, sb))
+    score = conf.w_cosine * cos + conf.w_jaro_winkler * jw + conf.w_levenshtein * lev
+    return {f"m{i}": (cos[i], jw[i], lev[i], score[i]) for i in range(len(a))}
 
 
-def test_broadcast_indexed_matches_fused(spark, pair_inputs):
-    m_feat = pair_inputs.select(
-        "mention_id", F.col("surf_a").alias("norm_surface")
-    ).withColumn("embedding", embed_text_binary("norm_surface"))
-    e_feat = pair_inputs.select(
-        "entity_id", F.col("surf_b").alias("norm_title")
-    ).withColumn("embedding", embed_text_binary("norm_title"))
-    cands = pair_inputs.select("mention_id", "entity_id")
-    conf = ScoringConfig()
-
-    s_bc = _collect_scores(
-        score_pairs_broadcast(cands, m_feat, e_feat, conf=conf)
-    )
-
-    fused_in = (
-        cands.join(
-            m_feat.select("mention_id", F.col("norm_surface").alias("surf_a"),
-                          F.col("embedding").alias("emb_a")), "mention_id")
-        .join(
-            e_feat.select("entity_id", F.col("norm_title").alias("surf_b"),
-                          F.col("embedding").alias("emb_b")), "entity_id")
-    )
-    s_fused = _collect_scores(score_pairs(fused_in, conf=conf))
-    assert s_bc.keys() == s_fused.keys()
-    for k in s_bc:
-        np.testing.assert_allclose(s_bc[k], s_fused[k], atol=1e-6, err_msg=str(k))
+@pytest.mark.parametrize("plan", ["broadcast", "join"])
+def test_matches_numpy_reference(monkeypatch, features, plan):
+    scored = _score(monkeypatch, features, plan)
+    _, m_feat, e_feat = features
+    ref = _numpy_reference(m_feat, e_feat, ScoringConfig())
+    assert scored.keys() == ref.keys()
+    for mid, r in scored.items():
+        assert r["entity_id"] == "e" + mid[1:]
+        got = (r["cosine"], r["jaro_winkler"], r["lev_sim"], r["score"])
+        np.testing.assert_allclose(got, ref[mid], atol=1e-6, err_msg=mid)
 
 
-def test_golden_values(spark, pair_inputs):
+def test_golden_values(monkeypatch, features):
     """Identical strings: cosine=1, jw=1, lev=1, score=1 (unit weights sum)."""
-    binry = pair_inputs.withColumns(
-        {"emb_a": embed_text_binary("surf_a"), "emb_b": embed_text_binary("surf_b")}
-    )
-    scored = {r["mention_id"]: r for r in score_pairs(binry).collect()}
+    scored = _score(monkeypatch, features, "broadcast")
     exact = scored["m0"]  # identical surfaces
     assert exact["cosine"] == pytest.approx(1.0, abs=1e-6)
     assert exact["jaro_winkler"] == pytest.approx(1.0)
